@@ -8,9 +8,10 @@ by source rows (``UPDATE SET *``), unmatched source rows are inserted
 
 Plan shape: a left_anti join (target rows whose key is absent from the
 source) unioned with the source. Both sides shuffle on the key — the same
-join MERGE compiles to internally. On a cluster this pairs with a
-partitioned table layout so only affected partitions rewrite
-(copy-on-write); here the table is a parquet dir and we atomically swap.
+join MERGE compiles to internally. ``upsert_parquet`` rewrites the whole
+parquet dir and swaps it; ``upsert_parquet_cow`` pairs the merge with a
+partitioned layout so only affected partitions rewrite (copy-on-write),
+each swapped in by directory rename.
 
 ``preserve_cols`` reproduces the dim_stock MERGE that keeps
 ``first_seen_date``/``stock_key`` from the matched target row
@@ -25,6 +26,7 @@ import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 
 def merge_upsert(
@@ -145,8 +147,12 @@ def upsert_parquet_cow(
     distinct partition values (bounded by partitions touched, e.g. a few
     dates — driver-safe); (2) read the target pruned to those partitions
     (Catalyst PartitionFilters — untouched history is never scanned);
-    (3) anti-join + union merge; (4) dynamic partition overwrite swaps
-    just those partition dirs.
+    (3) anti-join + union merge, staged as one file per touched
+    partition; (4) swap the staged partition dirs into the table by
+    rename. Untouched partitions keep their files.
+
+    The source is persisted for the call (unless the caller already
+    cached it), so the partition probe and the merge evaluate it once.
 
     Requires ``partition_by ⊆ keys`` so a key can never migrate between
     partitions (else rows outside the scanned slice could duplicate).
@@ -158,35 +164,79 @@ def upsert_parquet_cow(
             "a key that moves partitions breaks partition-scoped MERGE"
         )
     if not os.path.exists(path):
-        source.write.partitionBy(*partition_by).parquet(path)
+        _write_partitioned(source, partition_by, path)
         return
 
-    parts = source.select(*partition_by).distinct().collect()
-    cond = F.lit(False)
-    for row in parts:
-        match = F.lit(True)
-        for c in partition_by:
-            match = match & (F.col(c) == F.lit(row[c]))
-        cond = cond | match
-    target_slice = spark.read.parquet(path).filter(cond)
-    merged = merge_upsert(target_slice, source, keys, preserve_cols=preserve_cols)
-    # Stage the merged slice to a sibling dir BEFORE the overwrite commits:
-    # `merged` lazily reads the same files dynamic partition overwrite is
-    # about to delete, so a task retry / AQE stage re-run racing the commit
-    # could read deleted files or lose rows. The staged copy is durable
-    # (unlike localCheckpoint, it survives executor loss) and bounded by
-    # the partitions touched, not table size.
-    tmp = f"{path}.__cow_{uuid.uuid4().hex[:8]}"
+    owned = source.storageLevel == StorageLevel.NONE
+    if owned:
+        source.persist()
     try:
-        merged.write.partitionBy(*partition_by).parquet(tmp)
-        (
-            # explicit schema: partition-dir type inference must not
-            # retype partition columns (e.g. numeric-looking strings)
-            spark.read.schema(merged.schema).parquet(tmp)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*partition_by)
-            .parquet(path)
+        parts = source.select(*partition_by).distinct().collect()
+        if not parts:
+            return
+        cond = F.lit(False)
+        for row in parts:
+            match = F.lit(True)
+            for c in partition_by:
+                match = match & (F.col(c) == F.lit(row[c]))
+            cond = cond | match
+        target_slice = spark.read.parquet(path).filter(cond)
+        merged = merge_upsert(
+            target_slice, source, keys, preserve_cols=preserve_cols
         )
+        # Stage the merged slice in a sibling dir BEFORE touching the
+        # table: `merged` lazily reads the live files of the touched
+        # partitions, so it must be fully written before any of them is
+        # replaced. The staged copy is durable (unlike localCheckpoint, it
+        # survives executor loss) and bounded by the partitions touched,
+        # not table size.
+        tmp = f"{path}.__cow_{uuid.uuid4().hex[:8]}"
+        try:
+            staged = os.path.join(tmp, "new")
+            _write_partitioned(merged, partition_by, staged)
+            _swap_partitions(staged, path, os.path.join(tmp, "old"), len(partition_by))
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
     finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        if owned:
+            source.unpersist()
+
+
+def _write_partitioned(df: DataFrame, partition_by: list[str], path: str) -> None:
+    """Write ``df`` partitioned, one file per partition value."""
+    (
+        df.repartition(*partition_by)
+        .write.partitionBy(*partition_by)
+        .parquet(path)
+    )
+
+
+def _swap_partitions(staged: str, path: str, old: str, depth: int) -> None:
+    """Commit each partition dir under ``staged`` into the table at
+    ``path``: move the live dir (if any) aside under ``old``, rename the
+    staged one in. The same delete-and-rename Spark's dynamic partition
+    overwrite commits with, minus re-reading and re-writing the rows: a
+    reader between the two renames sees the partition missing, and a
+    failed rename-in puts the live dir back. The caller deletes ``old``."""
+    rels = [""]
+    for _ in range(depth):
+        rels = [
+            os.path.join(rel, d)
+            for rel in rels
+            for d in sorted(os.listdir(os.path.join(staged, rel)))
+            if "=" in d and os.path.isdir(os.path.join(staged, rel, d))
+        ]
+    for rel in rels:
+        live = os.path.join(path, rel)
+        aside = os.path.join(old, rel)
+        moved = os.path.exists(live)
+        if moved:
+            os.makedirs(os.path.dirname(aside), exist_ok=True)
+            os.rename(live, aside)
+        try:
+            os.makedirs(os.path.dirname(live), exist_ok=True)
+            os.rename(os.path.join(staged, rel), live)
+        except BaseException:
+            if moved:
+                os.rename(aside, live)
+            raise

@@ -125,10 +125,15 @@ def land_quotes(
         spark, dim_stock, paths["dim_stock"], keys=["symbol"],
         preserve_cols=["stock_key", "first_seen_date"],
     )
-    build_dim_date_frame(spark).write.mode("overwrite").parquet(paths["dim_date"])
-    build_dim_exchange_frame(spark).write.mode("overwrite").parquet(
-        paths["dim_exchange"]
-    )
+    # dim_date (2020-2026 calendar) and dim_exchange are static: land
+    # them once per warehouse. A table without its _SUCCESS marker (never
+    # written, or a write that died) is written again from scratch.
+    for table, build in (
+        ("dim_date", build_dim_date_frame),
+        ("dim_exchange", build_dim_exchange_frame),
+    ):
+        if not os.path.exists(os.path.join(paths[table], "_SUCCESS")):
+            build(spark).coalesce(1).write.mode("overwrite").parquet(paths[table])
 
     # -- fact (Glue job 2): MERGE on (stock_symbol, trade_date).
     # Copy-on-write: a daily batch rewrites only its trade_date partitions,

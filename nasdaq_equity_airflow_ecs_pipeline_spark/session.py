@@ -10,6 +10,14 @@ config block is what we would ship to a 1000-executor cluster — only
   partitions and let AQE shrink.
 - UTC session timezone (oracle comparability + cluster determinism).
 - Arrow enabled for the Pandas-UDF slow path.
+- Generated-code cache (``spark.sql.codegen.cache.maxEntries``) at 1000
+  classes instead of Spark's 100. Landing one trading day
+  (``plans.pipeline.run_pipeline``) uses about 170-210 distinct generated
+  classes, and one pass over the benchmark's read mix about 240, so a
+  100-entry LRU evicts each class before its next use and Janino
+  recompiles about 170-210 of them (about 1 s) on every day. With 1000 a
+  warm day compiles 2-16, the classes that inline that day's date
+  literals. The cache is static conf: it is fixed when the JVM starts.
 """
 
 from __future__ import annotations
@@ -38,6 +46,8 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # sized to a landed day's working set; see the module docstring
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # spark.sql.files.openCostInBytes stays at the stock 4 MiB
         # (VERDICT r12 #1): lowering it to 128 KiB shattered every
         # few-MB parquet scan into dozens of footer-only splits at

@@ -4,19 +4,31 @@ invariant) plus a second date (accumulation)."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from nasdaq_equity_airflow_ecs_pipeline_spark.plans.pipeline import run_pipeline
 
 
+def _file_stamps(root):
+    return {
+        os.path.relpath(os.path.join(d, f), root): os.path.getmtime(os.path.join(d, f))
+        for d, _, files in os.walk(root) for f in files
+    }
+
+
 def test_pipeline_end_to_end_and_idempotent(spark, tmp_path):
     wh = str(tmp_path / "warehouse")
+    static = ("dim_date", "dim_exchange")
 
     paths = run_pipeline(spark, wh, "2024-01-02")
     fact = spark.read.parquet(paths["fact_stock_daily_price"])
     n1 = fact.count()
     assert n1 == 5  # one row per symbol after latest-wins dedup
     assert fact.filter(F.col("daily_volatility").isNull()).count() == 0
+    dims1 = {t: _file_stamps(paths[t]) for t in static}
+    assert len([f for f in dims1["dim_exchange"] if f.endswith(".parquet")]) == 1
 
     # rerun same date -> counts unchanged (MERGE idempotency, J4)
     run_pipeline(spark, wh, "2024-01-02")
@@ -26,6 +38,8 @@ def test_pipeline_end_to_end_and_idempotent(spark, tmp_path):
     run_pipeline(spark, wh, "2024-01-03")
     fact2 = spark.read.parquet(paths["fact_stock_daily_price"])
     assert fact2.count() == 2 * n1
+    # the static dims are landed once: same files, same mtimes
+    assert {t: _file_stamps(paths[t]) for t in static} == dims1
 
     dim = spark.read.parquet(paths["dim_stock"])
     assert dim.count() == 5
@@ -39,8 +53,22 @@ def test_pipeline_end_to_end_and_idempotent(spark, tmp_path):
     assert wk.week_high >= wk.week_low
 
     # a third date in the NEXT ISO week: weekly rollup splits (2 weeks x 5
-    # symbols), monthly stays merged (same month)
+    # symbols), monthly stays merged (same month). The codegen cache holds
+    # a landed day's working set, so this warm day compiles only the
+    # classes that inline its date literals (16 measured with the
+    # 1000-entry cache, ~170 with Spark's 100-entry default). dim_exchange
+    # loses its _SUCCESS marker first, so it is written again.
+    os.remove(os.path.join(paths["dim_exchange"], "_SUCCESS"))
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    before = compiles.METRIC_COMPILATION_TIME().getCount()
     run_pipeline(spark, wh, "2024-01-08")
+    assert compiles.METRIC_COMPILATION_TIME().getCount() - before <= 40
+    dims3 = {t: _file_stamps(paths[t]) for t in static}
+    assert dims3["dim_date"] == dims1["dim_date"]
+    assert set(dims3["dim_exchange"]) != set(dims1["dim_exchange"])
+    assert "_SUCCESS" in dims3["dim_exchange"]
+    assert len([f for f in dims3["dim_exchange"] if f.endswith(".parquet")]) == 1
+    assert spark.read.parquet(paths["dim_exchange"]).count() == 3
     weekly2 = spark.read.parquet(paths["agg_stock_weekly_metrics"])
     assert weekly2.count() == 10
     assert {r.week for r in weekly2.select("week").distinct().collect()} == {1, 2}
@@ -101,3 +129,28 @@ def test_pipeline_quotefeed_ingest(spark, tmp_path):
     assert fact.count() == fact.select("stock_symbol").distinct().count() > 0
     raw = spark.read.json(f"{wh}/raw/date=2024-03-05")
     assert raw.count() > 0 and "symbol" in raw.columns
+
+
+def test_read_quotes_one_day_and_missing_day(spark, tmp_path):
+    """A one-day read sees that day only, with ``date`` typed as on a
+    read of all days; a day never landed reads as an empty frame."""
+    from nasdaq_equity_airflow_ecs_pipeline_spark.sources.jsonl import (
+        read_quotes_jsonl,
+        write_quotes_jsonl,
+    )
+    from nasdaq_equity_airflow_ecs_pipeline_spark.sources.mock import (
+        generate_mock_quotes,
+    )
+
+    root = str(tmp_path / "raw")
+    for day in ("2024-01-02", "2024-01-03"):
+        write_quotes_jsonl(generate_mock_quotes(spark, day), root)
+    every = read_quotes_jsonl(spark, root)
+    one = read_quotes_jsonl(spark, root, "2024-01-03")
+    assert one.schema == every.schema
+    assert {str(r.date) for r in one.select("date").distinct().collect()} == {"2024-01-03"}
+    assert one.count() == every.filter(F.col("date") == "2024-01-03").count() > 0
+
+    missing = read_quotes_jsonl(spark, root, "2024-01-09")
+    assert missing.schema == every.schema
+    assert missing.count() == 0

@@ -122,6 +122,109 @@ def test_upsert_cow_touches_only_affected_partitions(spark, tmp_path):
     # run-twice invariant on the cow path
     upsert_parquet_cow(spark, day2b, path, keys=["sym", "d"], partition_by=["d"])
     assert spark.read.parquet(path).count() == 4
+    assert all(len(files) == 1 for files in _data_files(path).values())
+    assert _staging_dirs(str(tmp_path)) == []
+
+
+def _data_files(root):
+    """{partition dir relative to root: [parquet file names]}."""
+    out = {}
+    for d, _, files in os.walk(root):
+        names = sorted(f for f in files if f.endswith(".parquet"))
+        if names:
+            out[os.path.relpath(d, root)] = names
+    return out
+
+
+def _staging_dirs(root):
+    return [d for d, _, _ in os.walk(root) if "__cow_" in d]
+
+
+def test_upsert_cow_nested_partitions_one_file_each(spark, tmp_path):
+    """Two partition columns (nested dirs): each touched partition is
+    committed as exactly one data file, untouched ones keep theirs, and
+    no staging dir is left behind."""
+    path = str(tmp_path / "agg")
+    cols = ["year", "region", "sym", "v"]
+    base = spark.createDataFrame(
+        [(2023, "eu", "A", 1.0), (2023, "us", "A", 2.0), (2024, "eu", "A", 3.0),
+         (2024, "eu", "B", 4.0), (2024, "us", "B", 5.0)],
+        cols,
+    ).repartition(4)
+    keys = ["year", "region", "sym"]
+    upsert_parquet_cow(spark, base, path, keys=keys, partition_by=["year", "region"])
+    before = _data_files(path)
+    assert sorted(before) == [
+        "year=2023/region=eu", "year=2023/region=us",
+        "year=2024/region=eu", "year=2024/region=us",
+    ]
+    assert all(len(files) == 1 for files in before.values())
+
+    batch = spark.createDataFrame(
+        [(2024, "eu", "A", 30.0), (2024, "eu", "C", 6.0), (2025, "us", "A", 7.0)],
+        cols,
+    ).repartition(3).cache()
+    upsert_parquet_cow(spark, batch, path, keys=keys, partition_by=["year", "region"])
+    # a source the caller cached stays cached
+    assert batch.storageLevel.useMemory
+    batch.unpersist()
+    after = _data_files(path)
+    assert sorted(after) == sorted([*before, "year=2025/region=us"])
+    assert all(len(files) == 1 for files in after.values())
+    for untouched in ("year=2023/region=eu", "year=2023/region=us", "year=2024/region=us"):
+        assert after[untouched] == before[untouched]
+    assert after["year=2024/region=eu"] != before["year=2024/region=eu"]
+    got = {(r.year, r.region, r.sym): r.v for r in spark.read.parquet(path).collect()}
+    assert got == {
+        (2023, "eu", "A"): 1.0, (2023, "us", "A"): 2.0,
+        (2024, "eu", "A"): 30.0, (2024, "eu", "B"): 4.0, (2024, "eu", "C"): 6.0,
+        (2024, "us", "B"): 5.0, (2025, "us", "A"): 7.0,
+    }
+    assert _staging_dirs(str(tmp_path)) == []
+
+
+def test_upsert_cow_failed_staged_write_leaves_table(spark, tmp_path, monkeypatch):
+    """An exception inside the staged write leaves the live table exactly
+    as it was (same files, same mtimes, same rows) and removes the
+    staging dir."""
+    from nasdaq_equity_airflow_ecs_pipeline_spark.operators import upsert
+
+    path = str(tmp_path / "fact")
+    day1 = spark.createDataFrame(
+        [("AAPL", "2024-01-01", 1.0), ("MSFT", "2024-01-02", 2.0)],
+        ["sym", "d", "v"],
+    )
+    upsert_parquet_cow(spark, day1, path, keys=["sym", "d"], partition_by=["d"])
+    stamps = {
+        os.path.join(d, f): os.path.getmtime(os.path.join(d, f))
+        for d, _, files in os.walk(path) for f in files
+    }
+
+    write = upsert._write_partitioned
+    levels = []
+
+    def write_then_fail(df, partition_by, out):
+        levels.append(batch.storageLevel)
+        write(df, partition_by, out)
+        raise RuntimeError("injected failure after staging")
+
+    monkeypatch.setattr(upsert, "_write_partitioned", write_then_fail)
+    batch = spark.createDataFrame(
+        [("AAPL", "2024-01-01", 9.0), ("GOOG", "2024-01-03", 3.0)],
+        ["sym", "d", "v"],
+    )
+    with pytest.raises(RuntimeError, match="injected failure"):
+        upsert_parquet_cow(spark, batch, path, keys=["sym", "d"], partition_by=["d"])
+    assert _staging_dirs(str(tmp_path)) == []
+    assert {
+        os.path.join(d, f): os.path.getmtime(os.path.join(d, f))
+        for d, _, files in os.walk(path) for f in files
+    } == stamps
+    got = {(r.sym, str(r.d)): r.v for r in spark.read.parquet(path).collect()}
+    assert got == {("AAPL", "2024-01-01"): 1.0, ("MSFT", "2024-01-02"): 2.0}
+    # the call persisted the source for the staged write, then released it
+    assert levels[0].useMemory
+    assert not batch.storageLevel.useMemory
 
 
 def test_merge_schema_evolution(spark):
